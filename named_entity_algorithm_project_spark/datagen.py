@@ -83,7 +83,7 @@ _TOOLS = ["search", "calculator", "plotter", None]
 # >50k unique linkable norms that engage the AUTO df-cap
 # (build_linking_tables) instead of recycling a toy vocabulary.
 # planted_alias_pairs()/planted_hard_pairs() expose the ground truth for
-# the recall measurements (scripts/linking_scale_run.py, test_linking).
+# the recall measurements (scripts/prefix_bench.py, test_linking).
 
 _POOL_CACHE: dict = {}
 
@@ -129,7 +129,7 @@ def planted_alias_pairs(vocab_scale: int) -> List[Tuple[str, str]]:
     material, the (dash, plural) and (dash, upper) surface pairs — the
     morphology/case variation the reference's TF-IDF gates DO merge (case
     variants score exactly 1.0; plural variants score high).
-    scripts/linking_scale_run.py reports direct-edge recall over the pairs
+    scripts/prefix_bench.py reports direct-edge recall over the pairs
     whose both spellings were extracted; tests/test_linking.py pins that
     the AUTO df-cap does not lose them relative to the exact join."""
     if vocab_scale <= 1:
@@ -164,8 +164,8 @@ def planted_pair_edge_stats(
     """(n_present, n_linked) for a ground-truth pair list against a linking
     result: how many pairs have BOTH norms in the extracted vocabulary, and
     how many of those are a direct (least, greatest) edge. Shared by
-    scripts/linking_scale_run.py, scripts/prefix_bench.py and the recall
-    test so the 'planted recall' definition cannot drift between them."""
+    scripts/prefix_bench.py and the recall test so the 'planted recall'
+    definition cannot drift between them."""
     from pyspark.sql import functions as F
 
     if not pairs:

@@ -14,7 +14,9 @@ reference's TfidfVectorizer makes them.
 
 from __future__ import annotations
 
+import math
 import re
+from collections import Counter
 from typing import Dict, List
 
 _WS = re.compile(r"\s\s+")
@@ -90,3 +92,22 @@ def tf_counts(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> Dict[str, in
     for gram in char_wb_ngrams(text, min_n, max_n):
         counts[gram] = counts.get(gram, 0) + 1
     return counts
+
+
+def tfidf_vectors(texts: List[str]) -> List[Dict[str, float]]:
+    """Per-text L2-normalized TF-IDF vectors ({gram: w}) over the corpus
+    ``texts``: raw tf, smooth idf ln((1+N)/(1+df)) + 1, L2 normalization —
+    the python form of linking.tfidf_weights, shared by the oracle's naive
+    scorer and the driver-local prefix scorer."""
+    counts = [tf_counts(t) for t in texts]
+    df: Counter = Counter()
+    for c in counts:
+        df.update(c.keys())
+    n = len(texts)
+    idf = {g: math.log((1.0 + n) / (1.0 + d)) + 1.0 for g, d in df.items()}
+    vecs: List[Dict[str, float]] = []
+    for c in counts:
+        w = {g: tf * idf[g] for g, tf in c.items()}
+        l2 = math.sqrt(sum(v * v for v in w.values()))
+        vecs.append({g: v / l2 for g, v in w.items()} if l2 > 0 else {})
+    return vecs

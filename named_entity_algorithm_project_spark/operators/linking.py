@@ -1,25 +1,38 @@
-"""Stage C — entity linking: candidate edges for canonicalization.
+"""Stage B — entity linking: candidate edges for canonicalization.
 
 The reference builds an all-pairs TF-IDF cosine matrix over unique entity
 norms (O(N²), app.py:3046-3067) and gates edges with adaptive thresholds,
 length guards, protected terms and type compatibility (app.py:3140-3183).
 
-Here the same *scores* come from a distributed inverted-index self-join:
+Here the same *scores* (sklearn TfidfVectorizer char_wb 3-5, smooth idf,
+L2, cosine) come from ONE ppjoin-style prefix filter (AllPairs — Bayardo
+et al., WWW'07) that never materializes N². The edge gate never passes a
+pair below ``adaptive_threshold_floor(base)``; sort each L2 vector by
+(-w, gram) and let a gram join the PREFIX while the squared suffix mass
+before it is still >= that floor. By Cauchy–Schwarz a pair whose shared
+grams all sit in both suffixes scores < the floor, so candidates come from
+postings × prefix-postings, and each candidate gets its exact cosine. The
+rule runs in one of two places:
 
-    norms --(ngrams UDF)--> explode --> tf --> idf (smooth) --> L2 weights
-    weights ⋈ weights ON ngram  (a.norm < b.norm)
-      --> SALTED partial-sum --> cosine per pair --> gate --> edges
+* driver-local (:func:`tfidf_prefix_pairs` inside
+  :func:`_build_linking_tables_local`) for every UNCAPPED TF-IDF
+  vocabulary up to ``MERGE_HINT_MIN_VOCAB`` (50k) norms: one bounded
+  collect of the fused vocabulary table, then python. It beat the
+  distributed cascade at every measured size up to that bound, with
+  identical outputs (BENCH.md crossover table, warm on local[4]: 11.3s
+  -> 1.7s at 6.4k norms, 25.3s -> 7.5s at 48.7k); below it the cascade's
+  cost is Spark job scheduling, not data;
+* distributed (:func:`similarity_pairs_prefix`) for what only it can do —
+  df-capped vocabularies (the AUTO cap above 50k norms, or an explicit
+  cap) and the semantic scorers:
 
-This is exact (same formula as sklearn TfidfVectorizer char_wb 3-5 +
-cosine_similarity) but never materializes N² — only pairs that share at
-least one n-gram, which is also the only set that can score > 0.
+    norms --(ngrams)--> explode --> tf --> idf (smooth) --> L2 weights
+    weights ⋈ prefix ON ngram --> candidates --> SALTED partial-sum
+      --> cosine per pair --> gate --> edges
 
-The DEFAULT candidate strategy tightens this further with ppjoin-style
-prefix filtering (:func:`similarity_pairs_prefix`): only pairs sharing a
-gram in one side's high-weight PREFIX can reach the gate floor
-(Cauchy–Schwarz over the low-weight suffixes), so the join volume falls
-from Σ_g df_g² to Σ_g df_g·prefix_df_g — measured 15× on a 62k-norm
-corpus with the identical gated edge set (scripts/prefix_bench.py).
+Uncapped, both paths emit the identical gated edge set as the naive
+inverted-index join (pinned in tests/test_linking.py; join volume falls
+from Σ_g df_g² to Σ_g df_g·prefix_df_g — scripts/prefix_bench.py).
 
 Skew: ubiquitous n-grams (" po", "ly") make some (a, b) partial products
 land on few reducers; the pair-sum aggregation is explicitly salted
@@ -56,8 +69,10 @@ from __future__ import annotations
 
 import math
 import os
+from bisect import bisect_right
+from collections import defaultdict
 from dataclasses import dataclass
-from typing import Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,7 +80,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
-from ..functions.ngrams import char_wb_ngrams_col
+from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
 from ..functions.textnorm import adaptive_threshold_col, adaptive_threshold_floor
 
 SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
@@ -90,6 +105,10 @@ MIN_PREFIX_RANK = 4
 #: session threshold) and shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB
 #: exchange-side — inside the broadcast envelope with the measured 5-10x
 #: inflation on an 8g driver; the cap aligns with auto_block_min_vocab.
+#: It is also the driver-local linking bound (build_linking_tables'
+#: ``local_max_vocab``): below it no vocabulary takes the AUTO df-cap or a
+#: merge hint, and the local path measured faster than the distributed
+#: one at every size up to it (BENCH.md crossover table).
 MERGE_HINT_MIN_VOCAB = 50_000
 
 #: Second, higher bound for the prefix score SIDES (the weights views):
@@ -131,6 +150,9 @@ class LinkingTables:
     # similarity join ran with (None = exact / non-tfidf scorer)
     n_norms: int = 0
     candidate_max_df: Optional[int] = None
+    # which cascade built the tables: "local" (driver-side python) or
+    # "distributed" (Spark joins) — see build_linking_tables
+    path: str = "distributed"
 
 
 # NOTE: the n-gram generator is a pure Column expression
@@ -716,20 +738,12 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     )
 
 
-#: Vocabulary size up to which the UNCAPPED tfidf linking cascade runs
-#: driver-side from the collected fused table (the same judgement call as
-#: connected_components' driver path: a few-thousand-norm vocabulary from
-#: any corpus size is a broadcast-scale dimension, and the ~30-job Spark
-#: cascade on it is pure scheduling overhead — measured ~5-7s at a
-#: 26-norm bench vocabulary for edge sets a python loop builds in
-#: milliseconds). Above it — or under an explicit/AUTO df-cap or a
-#: non-tfidf scorer — the distributed path runs unchanged.
-TFIDF_LOCAL_MAX_VOCAB = 5_000
 #: bounded-collect guard for the fused table (norm-type rows + abbrev
-#: pairs); at TFIDF_LOCAL_MAX_VOCAB norms the fused table is a few times
-#: the norm count, so this cap bounds driver memory even when the gate
-#: says "too big" and the distributed path takes over
-LOCAL_FUSED_ROW_CAP = 60_000
+#: pairs) that feeds the driver-local path. The fused table runs ~1.1 rows
+#: per norm (measured 53,526 rows at 48,691 norms), so twice the local
+#: vocabulary bound admits every vocabulary the path serves while bounding
+#: driver memory when the distributed path takes over.
+LOCAL_FUSED_ROW_CAP = 2 * MERGE_HINT_MIN_VOCAB
 
 
 def _types_compatible_py(types_a, types_b) -> bool:
@@ -759,22 +773,72 @@ def _adaptive_threshold_py(term: str, base: float) -> float:
     return max(base, 0.82)
 
 
+def tfidf_prefix_pairs(
+    norms: List[str], gate_floor: float
+) -> Dict[Tuple[str, str], float]:
+    """Driver-local, uncapped form of :func:`similarity_pairs_prefix`:
+    {(a, b): exact TF-IDF cosine} for every pair (a < b) scoring at least
+    ``gate_floor - 1e-9``. Same prefix rule (vectors sorted by (-w, gram);
+    a gram joins the prefix while the squared suffix mass before it is
+    >= the margined floor), candidates from postings × prefix-postings,
+    then an exact sparse dot per candidate. Its keys are exactly those of
+    the oracle's all-pairs scorer filtered at the same threshold (pinned
+    in tests/test_linking.py)."""
+    vecs = tfidf_vectors(norms)
+    # float-safety margin, as in similarity_pairs_prefix
+    t_eff = max(gate_floor - 1e-9, 0.0)
+    postings: Dict[str, List[int]] = defaultdict(list)
+    prefix_postings: Dict[str, List[int]] = defaultdict(list)
+    prefixes: List[List[str]] = []
+    for i, vec in enumerate(vecs):
+        suffix = sum(w * w for w in vec.values())
+        prefix = []
+        for g, w in sorted(vec.items(), key=lambda gw: (-gw[1], gw[0])):
+            if suffix < t_eff:
+                break
+            prefix.append(g)
+            prefix_postings[g].append(i)
+            suffix -= w * w
+        prefixes.append(prefix)
+        for g in vec:
+            postings[g].append(i)
+
+    out: Dict[Tuple[str, str], float] = {}
+    for i, vec in enumerate(vecs):
+        # partners j > i sharing a gram in EITHER side's prefix (posting
+        # lists are ascending, so bisect skips the j < i half)
+        cands = set()
+        for g in prefixes[i]:
+            js = postings[g]
+            cands.update(js[bisect_right(js, i):])
+        for g in vec:
+            js = prefix_postings.get(g)
+            if js:
+                cands.update(js[bisect_right(js, i):])
+        for j in cands:
+            other = vecs[j]
+            score = sum(w * other[g] for g, w in vec.items() if g in other)
+            if score >= t_eff:
+                a, b = norms[i], norms[j]
+                out[(a, b) if a < b else (b, a)] = score
+    return out
+
+
 def _build_linking_tables_local(
     spark, fused_rows, base: float, n_norms: int
 ) -> LinkingTables:
     """Driver-side construction of the LinkingTables from the COLLECTED
     fused (kind, k1, k2, cnt) table — a faithful python re-expression of
     the distributed steps below (gated-abbrev edges, one-round type-union
-    propagation, domain-alias edges, exact TF-IDF cosine + gate cascade),
-    sharing the scalar helpers and the oracle's scorer. Engages only
-    uncapped (the AUTO df-cap cannot trigger at this size) with the tfidf
-    scorer, where every candidate strategy yields the identical gated
-    edge set (pinned in tests). Output parity with the distributed path
-    is pinned by tests/test_linking.py::test_local_path_parity."""
-    from collections import defaultdict
-
-    from ..oracle import _tfidf_cosine_pairs
-
+    propagation, domain-alias edges, exact TF-IDF cosine + gate cascade)
+    sharing the scalar helpers. Scores come from :func:`tfidf_prefix_pairs`
+    at the gate floor, so the work is Σ_g df_g·prefix_df_g candidates
+    instead of every pair sharing a gram. Engages only uncapped with the
+    tfidf scorer, up to ``local_max_vocab`` norms (default
+    ``MERGE_HINT_MIN_VOCAB``, the size at which the AUTO df-cap takes
+    over), where every candidate strategy yields the identical gated edge
+    set. Output parity with the distributed path is pinned by
+    tests/test_linking.py::test_local_path_parity."""
     freq: dict = defaultdict(int)
     types: dict = defaultdict(set)
     abbr_pairs = set()
@@ -830,9 +894,11 @@ def _build_linking_tables_local(
                 alias_edges.add((node, alias))
                 all_nodes_full.add(alias)
 
-    # --- similarity edges (exact cosine, shared oracle scorer) -------------
+    # --- similarity edges (prefix-filtered exact cosine) ------------------
     sim_edges = set()
-    for (a, b), score in _tfidf_cosine_pairs(norms).items():
+    for (a, b), score in tfidf_prefix_pairs(
+        norms, adaptive_threshold_floor(base)
+    ).items():
         if a in protected and b in protected:
             continue
         if score < min(
@@ -868,6 +934,7 @@ def _build_linking_tables_local(
         base_threshold=base,
         n_norms=n_norms,
         candidate_max_df=None,
+        path="local",
     )
 
 
@@ -885,7 +952,7 @@ def build_linking_tables(
     embed_band_bits: Optional[int] = None,
     tfidf_candidates: str = "prefix",
     extracted: Optional[DataFrame] = None,
-    local_max_vocab: int = TFIDF_LOCAL_MAX_VOCAB,
+    local_max_vocab: int = MERGE_HINT_MIN_VOCAB,
 ) -> LinkingTables:
     """Assemble the full gated edge list for connected components.
 
@@ -906,9 +973,14 @@ def build_linking_tables(
     output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N
     (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
     absolute bound is what actually caps per-gram fanout at web scale;
-    scripts/linking_bench.py records the measured curves. Pass an explicit
-    int to force a cap, or ``auto_block_min_vocab=0`` to force exact at any
-    size.
+    scripts/prefix_bench.py reports the cap each corpus ran with. Pass an
+    explicit int to force a cap, or ``auto_block_min_vocab=0`` to force
+    exact at any size.
+
+    Uncapped TF-IDF vocabularies of at most ``local_max_vocab`` norms build
+    driver-side (:func:`_build_linking_tables_local`); ``local_max_vocab=0``
+    forces the distributed cascade. ``LinkingTables.path`` records which
+    one ran.
     """
     spark = mentions.sparkSession
     # ONE corpus pass total for BOTH corpus-scale inputs: the norm profiles
@@ -942,8 +1014,8 @@ def build_linking_tables(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # --- driver-local path for small UNCAPPED tfidf vocabularies -----------
-    # (see TFIDF_LOCAL_MAX_VOCAB). One bounded collect of the fused table
+    # --- driver-local path for UNCAPPED tfidf vocabularies ----------------
+    # (see MERGE_HINT_MIN_VOCAB). One bounded collect of the fused table
     # doubles as the size gate and the data; the distributed cascade runs
     # whenever the gate, an explicit df-cap, a low auto_block_min_vocab, or
     # a non-tfidf scorer says so.

@@ -322,17 +322,19 @@ def q08_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q09_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min), the batch form of the streaming
-    session-window operator."""
+    session-window operator. The gap is compared in microseconds: DuckDB's
+    epoch() keeps fractional seconds, while unix_timestamp would truncate
+    a 1800.5 s gap to 1800 and miss the split. (unix_micros needs a
+    TIMESTAMP; the NTZ column casts in the session's UTC zone, matching
+    DuckDB's epoch() of a naive timestamp.)"""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
     flagged = ev.withColumn(
         "new_session",
         F.when(
             F.lag("ts").over(w).isNull()
-            | (
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-                > 1800
-            ),
+            | (micros - F.lag(micros).over(w) > 1800 * 1_000_000),
             1,
         ).otherwise(0),
     )

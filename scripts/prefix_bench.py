@@ -3,7 +3,9 @@
 QUALITY under the engaged cap, not just cost).
 
 Same corpus, same AUTO df-cap, three strategies through the full
-build_linking_tables:
+build_linking_tables, always on the distributed cascade
+(``local_max_vocab=0``: below 50k norms an uncapped vocabulary would
+otherwise build driver-side, where the strategies are not used):
 
   all           the naive Σ df² inverted-index join (r3 baseline)
   prefix_parity ppjoin prefix filtering, cap on candidates AND scoring —
@@ -85,7 +87,7 @@ def main():
     for strategy in strategies:
         t0 = time.time()
         linking = build_linking_tables(
-            mentions, abbrevs, tfidf_candidates=strategy
+            mentions, abbrevs, tfidf_candidates=strategy, local_max_vocab=0
         )
         edge_rows = sorted(
             (r["src"], r["dst"]) for r in linking.edges.collect()

@@ -1,6 +1,6 @@
 """L4 semantic-LSH bench: candidate recall vs exact, wall vs vocab size.
 
-Two arms (mirrors scripts/linking_bench.py for the TF-IDF path):
+Two arms:
 
 * RECALL — at vocab sizes where the numpy N² ground truth is cheap,
   compare `semantic_pairs_lsh` (whose emitted scores are exact, so its
@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import json
 import os
+import random
+import string
 import sys
 import time
 
@@ -30,9 +32,31 @@ from named_entity_algorithm_project_spark.operators.linking import (
     semantic_pairs_lsh,
 )
 from named_entity_algorithm_project_spark.session import get_spark
-from scripts.linking_bench import build_vocab
 
 DIM = 64
+
+
+def build_vocab(n: int, seed: int = 5) -> list:
+    """Zipf-ish norms: short common prefixes (high-df grams) + rare cores."""
+    rng = random.Random(seed)
+    prefixes = ["pol", "met", "oxi", "ben", "ami", "chl", "flu", "nan"]
+    n_words = max(n // 2, 100)
+    words = sorted(
+        {
+            rng.choice(prefixes)
+            + "".join(
+                rng.choice(string.ascii_lowercase)
+                for _ in range(rng.randint(8, 12))
+            )
+            for _ in range(n_words)
+        }
+    )
+    norms = set()
+    while len(norms) < n:
+        norms.add(
+            " ".join(rng.choice(words) for _ in range(rng.randint(1, 3)))
+        )
+    return sorted(norms)
 
 
 def exact_pairs(norms: list, threshold: float) -> set:

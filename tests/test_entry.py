@@ -78,3 +78,28 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_q09_subsecond_gap_matches_duckdb(spark, tmp_path):
+    """A 1800.5 s gap opens a new session in the DuckDB oracle (epoch() is
+    a DOUBLE); q09 must not truncate it to a whole 1800 s."""
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    gaps_s = {1: [0.0, 1800.5, 1800.0], 2: [0.0, 1799.999999, 1800.000001]}
+    rows = []
+    for user, gaps in gaps_s.items():
+        ts = t0
+        for gap in gaps:
+            ts = ts + pd.Timedelta(microseconds=round(gap * 1e6))
+            rows.append({"event_id": len(rows), "ts": ts, "user_id": user})
+    events = pd.DataFrame(rows)
+    events["ts"] = events["ts"].astype("datetime64[us]")
+    path = tmp_path / "events.parquet"
+    events.to_parquet(path, index=False)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    duck_pdf = con.execute(entrymod.oracle_sql()["q09_sessionize"]).df()
+    spark_pdf = entrymod.queries()["q09_sessionize"](spark, str(tmp_path)).toPandas()
+    assert _normalize(spark_pdf) == _normalize(duck_pdf)
+    sessions = dict(zip(spark_pdf["user_id"], spark_pdf["n_sessions"]))
+    assert sessions == {1: 2, 2: 2}

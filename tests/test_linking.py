@@ -241,13 +241,15 @@ def test_fused_one_scan_parity(spark):
 
 
 def test_local_path_parity(spark):
-    """The driver-local small-vocab linking path (collected fused table +
-    python gate cascade) must produce the identical LinkingTables as the
-    distributed cascade: same (norm, freq, effective-types) rows, same
-    gated edge set, same extra nodes, same base threshold."""
+    """The driver-local linking path (collected fused table + prefix
+    scorer + python gate cascade) must produce the identical LinkingTables
+    as the distributed cascade: same (norm, freq, effective-types) rows,
+    same gated edge set, same extra nodes, same base threshold. The last
+    corpus (6,351 norms) lies above the former 5k local bound."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
+        generate_transcripts,
     )
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
@@ -257,9 +259,17 @@ def test_local_path_parity(spark):
         build_linking_tables,
     )
 
-    for n_convs, seed in ((60, 17), (150, 42)):
-        rows = generate_rows(n_convs=n_convs, seed=seed)
-        df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+    corpora = [
+        ((n_convs, seed), spark.createDataFrame(
+            generate_rows(n_convs=n_convs, seed=seed), TRANSCRIPTS_SCHEMA
+        ))
+        for n_convs, seed in ((60, 17), (150, 42))
+    ]
+    corpora.append((
+        (800, 7000),
+        generate_transcripts(spark, n_convs=800, seed=7000, vocab_scale=2500),
+    ))
+    for key, df in corpora:
         extracted = extract_combined(df).localCheckpoint(eager=True)
         mentions, abbrevs = split_extraction(extracted)
 
@@ -269,6 +279,7 @@ def test_local_path_parity(spark):
         loc = build_linking_tables(
             mentions, abbrevs, extracted=extracted
         )
+        assert (loc.path, dist.path) == ("local", "distributed"), key
         assert loc.candidate_max_df is None and dist.candidate_max_df is None
         assert loc.base_threshold == dist.base_threshold
         assert loc.n_norms == dist.n_norms
@@ -279,13 +290,49 @@ def test_local_path_parity(spark):
                 for r in lt.norms.collect()
             }
 
-        assert norms_set(loc) == norms_set(dist), (n_convs, seed)
+        assert norms_set(loc) == norms_set(dist), key
         assert {(r[0], r[1]) for r in loc.edges.collect()} == {
             (r[0], r[1]) for r in dist.edges.collect()
-        }, (n_convs, seed)
+        }, key
         assert {r[0] for r in loc.extra_nodes.collect()} == {
             r[0] for r in dist.extra_nodes.collect()
-        }, (n_convs, seed)
+        }, key
+    assert loc.n_norms > 5_000
+
+
+@pytest.mark.parametrize("floor", [0.82, 0.85, 0.95])
+def test_prefix_scorer_matches_oracle(floor):
+    """tfidf_prefix_pairs returns exactly the oracle's all-pairs scores at
+    or above its margined floor: same keys, scores within 1e-12 — on a
+    few-thousand-norm vocabulary and on edge cases (empty input, norms
+    shorter than 3 characters, case variants)."""
+    from named_entity_algorithm_project_spark.operators.linking import (
+        tfidf_prefix_pairs,
+    )
+
+    t_eff = floor - 1e-9
+    vocab = _random_vocab(
+        seed=3, n_words=750, n_base=1500, n_keep=1500, n_var=500
+    )
+    vocab = sorted(set(vocab) | {v.upper() for v in vocab[::7]})
+    cases = [
+        [],
+        ["a"],
+        ["ab", "AB", "ba", "a", "b"],
+        ["PCE", "pce", "Pce", "pce film", "PCE-film"],
+        vocab,
+    ]
+    assert len(vocab) > 2_000
+    for norms in cases:
+        expected = {
+            p: s for p, s in _tfidf_cosine_pairs(norms).items() if s >= t_eff
+        }
+        got = tfidf_prefix_pairs(norms, floor)
+        assert set(got) == set(expected), (len(norms), floor)
+        for p, s in got.items():
+            assert abs(s - expected[p]) <= 1e-12, p
+    # the large case exercises the filter: pairs above every floor exist
+    assert expected
 
 
 def test_auto_blocking_recall(spark):
@@ -503,7 +550,11 @@ def test_prefix_filter_gated_edges_identical(spark):
             for r in build_linking_tables(mentions, abbrevs, **kw).edges.collect()
         }
 
-    assert edges(tfidf_candidates="prefix") == edges(tfidf_candidates="all")
+    # uncapped, force the distributed cascade: at this size the default
+    # would build driver-side for both strategies and compare nothing
+    assert edges(tfidf_candidates="prefix", local_max_vocab=0) == edges(
+        tfidf_candidates="all", local_max_vocab=0
+    )
     naive_capped = edges(tfidf_candidates="all", candidate_max_df=3)
     assert edges(
         tfidf_candidates="prefix_parity", candidate_max_df=3
