@@ -30,29 +30,27 @@ rule runs in one of two places:
     weights ⋈ prefix ON ngram --> candidates --> SALTED partial-sum
       --> cosine per pair --> gate --> edges
 
-Uncapped, both paths emit the identical gated edge set as the naive
-inverted-index join (pinned in tests/test_linking.py; join volume falls
-from Σ_g df_g² to Σ_g df_g·prefix_df_g — scripts/prefix_bench.py).
+Uncapped, both paths emit exactly the gated edges of the all-pairs cosine
+(``oracle._tfidf_cosine_pairs``; pinned in tests/test_linking.py); the
+join volume falls from Σ_g df_g² to Σ_g df_g·prefix_df_g.
 
 Skew: ubiquitous n-grams (" po", "ly") make some (a, b) partial products
 land on few reducers; the pair-sum aggregation is explicitly salted
 (two-stage: (pair, salt) partial sums → pair total), on top of AQE skew-join
-splitting. But salting only fixes the REDUCE side — the join *output* is
+splitting. But salting only fixes the REDUCE side — candidate generation is
 quadratic in per-n-gram document frequency: an n-gram present in 10⁶ norms
 emits ~10¹² candidate rows before any aggregation. ``candidate_max_df``
-drops such n-grams from the join entirely (the classic prefix-filtered
-similarity join). It is AUTO-ENABLED above ``auto_block_min_vocab`` unique
-norms (default 50k) at ``min(5% of the vocabulary, auto_block_df_abs)`` —
-the absolute bound matters because the join output is Σ_g df_g², quadratic
-in per-gram df whatever the fraction: below the threshold the
-small-corpus reference parity is exact; above
-it the cap is what makes the join feasible at all. Dropping a df>5%·N
-n-gram loses little signal (its smooth idf is near the 1.0 floor, so it
-contributes the least cosine mass): the capped score is a LOWER BOUND on
-the exact cosine, measured short by <=0.06 with >=0.99 retention of pairs
-0.05 above the threshold (tests/test_linking.py::test_auto_blocking_recall),
-and the abbreviation/alias edge unions carry most true merges anyway
-(SURVEY §7.4).
+keeps such n-grams out of candidate generation (the classic
+prefix-filtered similarity join). It is AUTO-ENABLED above
+``MERGE_HINT_MIN_VOCAB`` unique norms (:func:`auto_candidate_max_df`);
+below that bound linking is exact. The cap bounds candidate generation
+only: scoring runs over the FULL vectors, so every emitted score is the
+exact cosine, and the gated edges are a superset of those a join scoring
+only the sub-cap grams would gate (its scores are lower bounds). Dropped
+high-df grams carry the least idf weight, so little cosine mass decides
+which pairs become candidates: >=0.99 recall of pairs 0.05 above the gate
+(tests/test_linking.py::test_auto_blocking_recall), and the
+abbreviation/alias edge unions carry most true merges anyway (SURVEY §7.4).
 
 Edge gates (reference parity, app.py:3140-3183):
   * protected-term pairs never merge (both endpoints protected)
@@ -85,7 +83,7 @@ from ..functions.textnorm import adaptive_threshold_col, adaptive_threshold_floo
 
 SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 
-#: Under cap_scope="candidates" a heavy df-cap can strip so much squared
+#: Under a df-cap, dropping high-df grams can strip so much squared
 #: mass that the Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
 #: guarantees the top-MIN_PREFIX_RANK sub-cap grams (rarest, most
 #: identity-carrying) always join the prefix so case/morphology variants
@@ -104,11 +102,12 @@ MIN_PREFIX_RANK = 4
 #: both safe (actual sizes, not estimates, and well under the 64 MiB
 #: session threshold) and shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB
 #: exchange-side — inside the broadcast envelope with the measured 5-10x
-#: inflation on an 8g driver; the cap aligns with auto_block_min_vocab.
-#: It is also the driver-local linking bound (build_linking_tables'
-#: ``local_max_vocab``): below it no vocabulary takes the AUTO df-cap or a
-#: merge hint, and the local path measured faster than the distributed
-#: one at every size up to it (BENCH.md crossover table).
+#: inflation on an 8g driver. The same bound decides the AUTO df-cap
+#: (:func:`auto_candidate_max_df`) and the driver-local linking path
+#: (build_linking_tables' ``local_max_vocab``): below it no vocabulary
+#: takes the df-cap or a merge hint, and the local path measured faster
+#: than the distributed one at every size up to it (BENCH.md crossover
+#: table).
 MERGE_HINT_MIN_VOCAB = 50_000
 
 #: Second, higher bound for the prefix score SIDES (the weights views):
@@ -132,6 +131,23 @@ MERGE_HINT_MIN_VOCAB = 50_000
 #: TB-scale shuffle dirs lower it toward ~500k to take the shuffle plan
 #: before executor heaps become the binding constraint.
 SCORE_PIN_MIN_VOCAB = int(os.environ.get("KG_SCORE_PIN_MIN_VOCAB", "2000000"))
+
+#: Hash-salt fan-out of the score aggregation: partial products of hub
+#: pairs spread across this many reducers before the final pair-sum.
+SALT_PARTITIONS = 16
+
+
+def auto_candidate_max_df(n_norms: int) -> Optional[int]:
+    """The AUTO df-cap for a vocabulary of ``n_norms`` unique norms: None
+    (exact) up to ``MERGE_HINT_MIN_VOCAB``, else
+    ``min(max(5% of n_norms, 100), 4000)``. Candidate generation is
+    Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N (5% of 10⁶
+    is a 50k-df gram emitting 2.5G candidate rows), so the absolute bound
+    is what actually caps per-gram fanout at web scale;
+    scripts/prefix_bench.py reports the cap each corpus ran with."""
+    if n_norms <= MERGE_HINT_MIN_VOCAB:
+        return None
+    return min(max(int(0.05 * n_norms), 100), 4_000)
 
 
 def _dim_hint(df: DataFrame, large_vocab: bool) -> DataFrame:
@@ -169,16 +185,6 @@ def linkable_mentions(mentions: DataFrame) -> DataFrame:
         mentions.filter(~F.upper(F.col("entity_type")).isin(*SKIP_TYPES))
         .withColumn("norm", F.trim(F.col("entity")))
         .filter(F.col("norm") != "")
-    )
-
-
-def norm_profiles(linkable: DataFrame) -> DataFrame:
-    """freq + type set per unique norm (app.py:3256-3263)."""
-    return linkable.groupBy("norm").agg(
-        F.count(F.lit(1)).alias("freq"),
-        F.array_sort(
-            F.collect_set(F.upper(F.trim(F.col("entity_type"))))
-        ).alias("types"),
     )
 
 
@@ -229,66 +235,17 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
     )
 
 
-def similarity_pairs(
-    weights: DataFrame,
-    salt_partitions: int = 16,
-    candidate_max_df: Optional[int] = None,
-    df_counts: Optional[DataFrame] = None,
-    large_vocab: bool = True,
-) -> DataFrame:
-    """Exact cosine for every norm pair sharing an n-gram: (a, b, score).
-
-    Two-stage salted aggregation: the inner groupBy includes a hash-salt so
-    partial products of hub pairs spread across ``salt_partitions`` reducers
-    before the final pair-sum.
-    """
-    left = weights.select(
-        F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
-    )
-    right = weights.select(
-        F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
-    )
-    if candidate_max_df is not None and df_counts is not None:
-        # merge-join hint (large vocab only): `keep` is
-        # GRAM-vocabulary-sized (~10-15x the norm count). An explicit
-        # broadcast OOM'd the 640k-norm tier, and even AQE's own
-        # estimate-driven broadcast choice did (string-heavy gram tables
-        # inflate 5-10x their estimated size as hash relations) —
-        # BENCH.md round-5 curve. The join key is ngram, which the
-        # postings join shuffles on anyway.
-        keep = _dim_hint(
-            df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
-            large_vocab,
-        )
-        left = left.join(keep, "ngram")
-        right = right.join(keep, "ngram")
-
-    joined = left.join(right, "ngram").filter(F.col("a") < F.col("b"))
-    partial = (
-        joined.withColumn(
-            "salt", F.pmod(F.xxhash64("ngram"), F.lit(salt_partitions))
-        )
-        .groupBy("a", "b", "salt")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("part"))
-    )
-    return partial.groupBy("a", "b").agg(F.sum("part").alias("score"))
-
-
 def similarity_pairs_prefix(
     weights: DataFrame,
     gate_floor: float,
-    salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
-    df_counts: Optional[DataFrame] = None,
-    cap_scope: str = "candidates",
-    weights_materialized: bool = False,
     large_vocab: bool = True,
     score_pin: bool = False,
 ) -> DataFrame:
     """Prefix-filtered similarity join (AllPairs/ppjoin family — Bayardo
-    et al., "Scaling Up All Pairs Similarity Search", WWW'07): a fraction
-    of the naive join volume, with provable relations to
-    :func:`similarity_pairs`'s output.
+    et al., "Scaling Up All Pairs Similarity Search", WWW'07): (a, b,
+    score) with the exact TF-IDF cosine for every candidate pair scoring
+    at least ``gate_floor - 1e-9``, at a fraction of the naive join volume.
 
     The edge gate never passes a pair below ``gate_floor``
     (= adaptive_threshold_floor(base) — the minimum of the reference's
@@ -302,45 +259,42 @@ def similarity_pairs_prefix(
     naive Σ_g df_g² — the high-df grams that dominate the quadratic term
     carry the least idf weight, so they land in suffixes and their df²
     blowup disappears), then the cosine is recomputed per candidate with
-    the same salted two-stage aggregation as the naive join. UNCAPPED,
-    the gated edge set is IDENTICAL to the naive join's (pinned in
-    tests/test_linking.py).
+    a salted two-stage aggregation. UNCAPPED, the output is every pair of
+    the all-pairs cosine at or above the margined floor (pinned against
+    ``oracle._tfidf_cosine_pairs`` in tests/test_linking.py).
 
-    ``candidate_max_df`` composes via ``cap_scope``:
-
-    * ``"candidates"`` (default): the cap bounds CANDIDATE GENERATION
-      only (grams with df>cap never join), while scoring runs over the
-      FULL vectors — every emitted score is the EXACT cosine. The gated
-      edge set is a SUPERSET of the naive capped path's: a naive-capped
-      edge shares a sub-cap gram scoring ≥ the gate, which cannot happen
-      with all shared sub-cap grams in both suffixes (the Cauchy–Schwarz
-      bound), so the pair is a candidate here too, and its exact score
-      ≥ the naive lower bound. This closes the measured quality hole
-      where a morphology-heavy vocabulary (every gram of a planted alias
-      pair moderately common) drove even cosine-1.0 case variants' capped
-      lower-bound scores under the gate — planted-pair recall collapsed
-      to 0 while the exact join held 0.5+ (test_planted_pair_recall_
-      under_cap pins the recovery).
-    * ``"all"``: the cap drops grams from scoring too — term-for-term
-      equal to the naive capped path's lower-bound scores, identical
-      gated edges (the A/B parity mode scripts/prefix_bench.py hashes).
+    ``candidate_max_df`` bounds CANDIDATE GENERATION only (grams with
+    df>cap never join), while scoring runs over the FULL vectors — every
+    emitted score is the EXACT cosine. The output is a SUPERSET of the
+    above-floor pairs of a capped join that scores only sub-cap grams: such
+    a pair shares a sub-cap gram, and it cannot have all of them in both
+    suffixes (the Cauchy–Schwarz bound), so it is a candidate here too,
+    and its exact score ≥ the capped lower bound. Exact scoring closes the
+    measured quality hole where a morphology-heavy vocabulary (every gram
+    of a planted alias pair moderately common) drove even cosine-1.0 case
+    variants' capped lower-bound scores under the gate — planted-pair
+    recall collapsed to 0 while the exact join held 0.5+
+    (test_planted_pair_recall_under_cap pins the recovery).
     """
-    # the weights feed several consumers below (prefix marking, the
-    # candidate join, score sides) — materialize once instead of
-    # re-running the TF-IDF explode/agg/join DAG per consumer (skipped
-    # when the caller already checkpointed them, e.g. to derive df_counts)
-    if not weights_materialized:
-        weights = weights.localCheckpoint(eager=True)
+    # the weights feed several consumers below (df counts, prefix marking,
+    # the candidate join, score sides) — materialize once instead of
+    # re-running the TF-IDF explode/agg/join DAG per consumer
+    weights = weights.localCheckpoint(eager=True)
     cand_weights = weights
-    if candidate_max_df is not None and df_counts is not None:
-        # merge-join hint (large vocab only) — gram-vocabulary-sized; see
-        # similarity_pairs
+    if candidate_max_df is not None:
+        df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
+        # merge-join hint (large vocab only): `keep` is
+        # GRAM-vocabulary-sized (~10-15x the norm count). An explicit
+        # broadcast OOM'd the 640k-norm tier, and even AQE's own
+        # estimate-driven broadcast choice did (string-heavy gram tables
+        # inflate 5-10x their estimated size as hash relations) —
+        # BENCH.md round-5 curve. The join key is ngram, which the
+        # postings join shuffles on anyway.
         keep = _dim_hint(
             df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
             large_vocab,
         )
         cand_weights = weights.join(keep, "ngram")
-    score_weights = weights if cap_scope == "candidates" else cand_weights
     # float-safety margin widens prefixes slightly (never prunes a pair the
     # exact arithmetic could pass)
     t_eff = max(gate_floor - 1e-9, 0.0)
@@ -355,12 +309,11 @@ def similarity_pairs_prefix(
     # the prefix while the not-yet-covered tail could still reach the floor
     marked = cand_weights.withColumn("_suffix_before", total - cum + w2)
     keep_prefix = F.col("_suffix_before") >= t_eff
-    if cap_scope == "candidates" and candidate_max_df is not None:
+    if candidate_max_df is not None:
         # Under a heavy cap a vector can lose so much squared mass that the
         # suffix rule yields an EMPTY prefix (capped total < gate floor) —
-        # consistent with the naive capped gate (its lower-bound score
-        # cannot pass either) but fatal for exact scoring, which this
-        # scope exists to provide. Guarantee a minimum prefix of the
+        # fatal for exact scoring, since such a pair's exact cosine can
+        # still clear the gate. Guarantee a minimum prefix of the
         # top-weight SUB-CAP grams: those are the rarest, most
         # identity-carrying grams (df of a few), so the extra candidate
         # volume is tiny while pairs whose similarity lives in rare grams
@@ -398,11 +351,10 @@ def similarity_pairs_prefix(
     # min(n_a,n_b)·maxw(a)·maxw(b)  — both exact inequalities, so pruning
     # on their min keeps the gated edge set IDENTICAL (the binary-cosine
     # √(n_a/n_b) count-ratio bound is NOT sound for TF-IDF weights and is
-    # deliberately not used). Stats come from the SCORE vectors (full
-    # vectors under cap_scope="candidates") because the emitted score is
-    # the full cosine.
+    # deliberately not used). Stats come from the FULL vectors because the
+    # emitted score is the full cosine.
     stats = _dim_hint(  # vocabulary-sized — sort-merge at large vocab
-        score_weights.groupBy("norm").agg(
+        weights.groupBy("norm").agg(
             F.max("w").alias("_maxw"),
             F.sum("w").alias("_l1"),
             F.count(F.lit(1)).alias("_n"),
@@ -452,13 +404,13 @@ def similarity_pairs_prefix(
     # adaptive broadcast threshold while the string-keyed hash relation it
     # would build is 512 MB+ — the r6 tier-4 OOM (see the constant's doc).
     left = _dim_hint(
-        score_weights.select(
+        weights.select(
             F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
         ),
         score_pin,
     )
     right = _dim_hint(
-        score_weights.select(
+        weights.select(
             F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
         ),
         score_pin,
@@ -472,7 +424,7 @@ def similarity_pairs_prefix(
     )
     partial = (
         joined.withColumn(
-            "salt", F.pmod(F.xxhash64("ngram"), F.lit(salt_partitions))
+            "salt", F.pmod(F.xxhash64("ngram"), F.lit(SALT_PARTITIONS))
         )
         .groupBy("a", "b", "salt")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("part"))
@@ -834,10 +786,9 @@ def _build_linking_tables_local(
     sharing the scalar helpers. Scores come from :func:`tfidf_prefix_pairs`
     at the gate floor, so the work is Σ_g df_g·prefix_df_g candidates
     instead of every pair sharing a gram. Engages only uncapped with the
-    tfidf scorer, up to ``local_max_vocab`` norms (default
+    tfidf scorer, up to ``local_max_vocab`` norms and never above
     ``MERGE_HINT_MIN_VOCAB``, the size at which the AUTO df-cap takes
-    over), where every candidate strategy yields the identical gated edge
-    set. Output parity with the distributed path is pinned by
+    over. Output parity with the distributed path is pinned by
     tests/test_linking.py::test_local_path_parity."""
     freq: dict = defaultdict(int)
     types: dict = defaultdict(set)
@@ -941,16 +892,10 @@ def _build_linking_tables_local(
 def build_linking_tables(
     mentions: DataFrame,
     abbrevs: DataFrame,
-    salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
-    auto_block_min_vocab: int = 50_000,
-    auto_block_df_frac: float = 0.05,
-    auto_block_df_abs: int = 4_000,
     score_source: str = "tfidf",
-    embed_dim: int = 64,
     embed_bands: Optional[int] = None,
     embed_band_bits: Optional[int] = None,
-    tfidf_candidates: str = "prefix",
     extracted: Optional[DataFrame] = None,
     local_max_vocab: int = MERGE_HINT_MIN_VOCAB,
 ) -> LinkingTables:
@@ -967,20 +912,14 @@ def build_linking_tables(
     (:func:`semantic_lsh_tier` — 8x4 below ~40k norms, 10x6 above), exactly
     as the TF-IDF df-cap AUTO keys off ``n_norms``; an explicit int wins.
 
-    ``candidate_max_df=None`` means AUTO: exact (no n-gram dropped) while the
-    vocabulary is under ``auto_block_min_vocab`` unique norms, else capped at
-    ``min(auto_block_df_frac * n_norms, auto_block_df_abs)``. The join's
-    output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N
-    (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
-    absolute bound is what actually caps per-gram fanout at web scale;
-    scripts/prefix_bench.py reports the cap each corpus ran with. Pass an
-    explicit int to force a cap, or ``auto_block_min_vocab=0`` to force
-    exact at any size.
+    ``candidate_max_df=None`` means AUTO (:func:`auto_candidate_max_df`):
+    exact up to ``MERGE_HINT_MIN_VOCAB`` unique norms, capped above. Pass
+    an explicit int to force a cap.
 
-    Uncapped TF-IDF vocabularies of at most ``local_max_vocab`` norms build
-    driver-side (:func:`_build_linking_tables_local`); ``local_max_vocab=0``
-    forces the distributed cascade. ``LinkingTables.path`` records which
-    one ran.
+    Uncapped TF-IDF vocabularies of at most ``local_max_vocab`` norms (and
+    never above ``MERGE_HINT_MIN_VOCAB``) build driver-side
+    (:func:`_build_linking_tables_local`); ``local_max_vocab=0`` forces the
+    distributed cascade. ``LinkingTables.path`` records which one ran.
     """
     spark = mentions.sparkSession
     # ONE corpus pass total for BOTH corpus-scale inputs: the norm profiles
@@ -1017,8 +956,8 @@ def build_linking_tables(
     # --- driver-local path for UNCAPPED tfidf vocabularies ----------------
     # (see MERGE_HINT_MIN_VOCAB). One bounded collect of the fused table
     # doubles as the size gate and the data; the distributed cascade runs
-    # whenever the gate, an explicit df-cap, a low auto_block_min_vocab, or
-    # a non-tfidf scorer says so.
+    # whenever the gate, a df-cap (explicit, or AUTO above
+    # MERGE_HINT_MIN_VOCAB norms), or a non-tfidf scorer says so.
     if (
         score_source == "tfidf"
         and candidate_max_df is None
@@ -1028,10 +967,7 @@ def build_linking_tables(
         if len(sample) <= LOCAL_FUSED_ROW_CAP:
             m_norm_set = {r["k1"] for r in sample if r["kind"] == "M"}
             n_norms_l = len(m_norm_set)
-            auto_cap_would_engage = bool(
-                auto_block_min_vocab and n_norms_l > auto_block_min_vocab
-            )
-            if n_norms_l <= local_max_vocab and not auto_cap_would_engage:
+            if n_norms_l <= min(local_max_vocab, MERGE_HINT_MIN_VOCAB):
                 n_rows_l = sum(
                     int(r["cnt"]) for r in sample if r["kind"] == "M"
                 )
@@ -1041,7 +977,7 @@ def build_linking_tables(
                     compute_base_threshold(n_rows_l),
                     n_norms_l,
                 )
-    # identical to norm_profiles(linkable): freq = mention count per norm,
+    # per-norm profile (app.py:3256-3263): freq = mention count per norm,
     # types = sorted set of upper(trim(entity_type))
     profiles = (
         fused.filter(F.col("kind") == "M")
@@ -1057,14 +993,8 @@ def build_linking_tables(
     ).collect()[0]
     n_rows, n_norms = int(stats["n_rows"]), int(stats["n_norms"])
     base = compute_base_threshold(n_rows)
-    if (
-        candidate_max_df is None
-        and auto_block_min_vocab
-        and n_norms > auto_block_min_vocab
-    ):
-        candidate_max_df = min(
-            max(int(auto_block_df_frac * n_norms), 100), auto_block_df_abs
-        )
+    if candidate_max_df is None:
+        candidate_max_df = auto_candidate_max_df(n_norms)
 
     protected = sorted(PROTECTED_TERMS)
     # all vocabulary-sized dim hints key off the MEASURED vocabulary — the
@@ -1157,62 +1087,24 @@ def build_linking_tables(
 
     # --- similarity edges -----------------------------------------------------
     if score_source == "semantic_exact":
-        scored = semantic_pairs_exact(profiles.select("norm"), dim=embed_dim)
+        scored = semantic_pairs_exact(profiles.select("norm"))
     elif score_source == "semantic_lsh":
         tier_bands, tier_bits = semantic_lsh_tier(n_norms)
         scored = semantic_pairs_lsh(
             profiles.select("norm"),
-            dim=embed_dim,
             bands=embed_bands if embed_bands is not None else tier_bands,
             band_bits=(
                 embed_band_bits if embed_band_bits is not None else tier_bits
             ),
         )
     else:
-        weights = tfidf_weights(profiles.select("norm"), n_norms)
-        weights_materialized = False
-        if (
-            candidate_max_df is not None
-            and tfidf_candidates in ("prefix", "prefix_parity")
-        ):
-            # the df-cap keep-list AND the prefix join both consume the
-            # weights — checkpoint once here so the TF-IDF explode/agg DAG
-            # doesn't execute twice on the capped path
-            weights = weights.localCheckpoint(eager=True)
-            weights_materialized = True
-        tf_df_counts = (
-            weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-            if candidate_max_df is not None
-            else None
+        scored = similarity_pairs_prefix(
+            tfidf_weights(profiles.select("norm"), n_norms),
+            gate_floor=adaptive_threshold_floor(base),
+            candidate_max_df=candidate_max_df,
+            large_vocab=large_vocab,
+            score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
         )
-        if tfidf_candidates in ("prefix", "prefix_parity"):
-            # default "prefix": ppjoin-style prefix filtering — identical
-            # gated edges uncapped, EXACT-scored superset under the df-cap
-            # (cap bounds candidate generation only); "prefix_parity"
-            # reproduces the naive capped lower-bound scores bit-for-bit
-            # (A/B hashing); "all" keeps the plain inverted-index join
-            # (oracle tests / benchmarking baseline).
-            scored = similarity_pairs_prefix(
-                weights,
-                gate_floor=adaptive_threshold_floor(base),
-                salt_partitions=salt_partitions,
-                candidate_max_df=candidate_max_df,
-                df_counts=tf_df_counts,
-                cap_scope=(
-                    "candidates" if tfidf_candidates == "prefix" else "all"
-                ),
-                weights_materialized=weights_materialized,
-                large_vocab=large_vocab,
-                score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
-            )
-        else:
-            scored = similarity_pairs(
-                weights,
-                salt_partitions=salt_partitions,
-                candidate_max_df=candidate_max_df,
-                df_counts=tf_df_counts,
-                large_vocab=large_vocab,
-            )
 
     sim_edges = gate_scored_pairs(
         scored, profiles_eff, protected, base, large_vocab=large_vocab

@@ -4,8 +4,9 @@
       Stage A  extract    — Arrow-UDF mention detection, checkpointed per
                             conv_id hash-bucket with lineage rows (resume
                             skips committed buckets)
-      Stage B  link       — TF-IDF inverted-index similarity + abbrev/alias
-                            edges (salted aggregation)
+      Stage B  link       — prefix-filtered TF-IDF cosine + abbrev/alias
+                            edges (driver-local up to 50k norms, else
+                            distributed with salted aggregation)
       Stage C  canonical  — iterative-join connected components + pick
       Stage D  triples    — nearest-property join -> (subj, pred, obj)
       Stage E  materialize— entities, triples, alias_groups, canonical_map,
@@ -54,7 +55,6 @@ from .operators.triples import build_triples, mention_triples, same_as_triples
 class PipelineConfig:
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD
     n_buckets: int = 8
-    salt_partitions: int = 16
     candidate_max_df: Optional[int] = None
     user_entities: List[Tuple[str, str]] = field(default_factory=list)
     user_canonical: Optional[Mapping[str, List[str]]] = None
@@ -82,10 +82,6 @@ class PipelineConfig:
     # "semantic_exact" (L4 embedding cosine, O(N²) — small vocab), or
     # "semantic_lsh" (L4 banded-LSH blocked — the scale path)
     score_source: str = "tfidf"
-    # tfidf candidate strategy: "prefix" (default — ppjoin prefix filter,
-    # exact-scored under the df-cap), "prefix_parity" (cap lower-bound
-    # parity with the naive join), or "all" (naive inverted-index join)
-    tfidf_candidates: str = "prefix"
     # semantic_lsh recall dials (candidate prob at cosine c is
     # 1-(1-p^band_bits)^bands with p = 1-acos(c)/pi): more bands = more
     # recall & more candidates; more band_bits = tighter blocks. None =
@@ -225,12 +221,10 @@ def run_pipeline(
     linking = build_linking_tables(
         mentions_raw,
         abbrevs,
-        salt_partitions=config.salt_partitions,
         candidate_max_df=config.candidate_max_df,
         score_source=config.score_source,
         embed_bands=config.embed_bands,
         embed_band_bits=config.embed_band_bits,
-        tfidf_candidates=config.tfidf_candidates,
         extracted=extracted_committed,
     )
 

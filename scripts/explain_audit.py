@@ -95,16 +95,12 @@ def main() -> None:
     # localCheckpoint their outputs (cache-hygiene), which truncates the
     # lineage .explain would show — so audit the PRE-checkpoint plans the
     # pipeline actually executes.
-    from pyspark.sql import functions as F
-
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
         split_extraction,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
         linkable_mentions,
-        norm_profiles,
-        similarity_pairs,
         similarity_pairs_prefix,
         tfidf_weights,
     )
@@ -124,27 +120,20 @@ def main() -> None:
     out.append("```")
 
     mentions, abbrevs = extract_mentions(t)
-    profiles = norm_profiles(linkable_mentions(mentions))
-    weights = tfidf_weights(profiles.select("norm"), 1000)
-    scored = similarity_pairs(weights, salt_partitions=16)
-    out.append(
-        "\n## kg: tfidf similarity scoring (inverted-index join + salted agg)\n```"
+    weights = tfidf_weights(
+        linkable_mentions(mentions).select("norm").distinct(), 1000
     )
-    out.extend(key_lines(formatted(scored.filter(F.col("score") >= 0.8))))
-    out.append("```")
-
     scored_prefix = similarity_pairs_prefix(
-        weights, gate_floor=0.82, salt_partitions=16, large_vocab=False
+        weights, gate_floor=0.82, large_vocab=False
     )
     out.append(
-        "\n## kg: tfidf similarity scoring, DEFAULT prefix-filtered path\n"
+        "\n## kg: tfidf similarity scoring, prefix-filtered distributed path\n"
         "\n(ppjoin candidate generation: window marks each norm's"
         "\nhigh-weight prefix, postings join only against prefixes, then"
-        "\nexact rescoring over candidates — note the candidate join keys"
-        "\nand the same salted final aggregation; 15x the naive join at"
-        "\n60k norms, BENCH.md. Below MERGE_HINT_MIN_VOCAB the"
-        "\nvocabulary-sized inputs may broadcast — AQE decides from runtime"
-        "\nsizes.)\n```"
+        "\nexact rescoring over candidates with a salted two-stage"
+        "\naggregation; 15x the naive join at 60k norms, BENCH.md. Below"
+        "\nMERGE_HINT_MIN_VOCAB the vocabulary-sized inputs may broadcast —"
+        "\nAQE decides from runtime sizes.)\n```"
     )
     out.extend(key_lines(formatted(scored_prefix)))
     out.append("```")
@@ -159,7 +148,7 @@ def main() -> None:
     # checkpoint (accurate statistics), so AQE's runtime-size broadcast of
     # them is allowed — pinning them measured 2.2x slower at the 62k tier.
     scored_prefix_large = similarity_pairs_prefix(
-        weights, gate_floor=0.82, salt_partitions=16, large_vocab=True
+        weights, gate_floor=0.82, large_vocab=True
     )
     plan_large = formatted(scored_prefix_large)
     n_smj = plan_large.count(") SortMergeJoin")

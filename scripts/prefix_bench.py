@@ -1,31 +1,20 @@
-"""A/B/C: naive inverted-index similarity join vs the prefix-filtered one
-(VERDICT r3 items 1+2 — cut the vocab-scale linking wall, measure linking
-QUALITY under the engaged cap, not just cost).
+"""Linking A/B: the default build_linking_tables path against the forced
+distributed cascade on one corpus.
 
-Same corpus, same AUTO df-cap, three strategies through the full
-build_linking_tables, always on the distributed cascade
-(``local_max_vocab=0``: below 50k norms an uncapped vocabulary would
-otherwise build driver-side, where the strategies are not used):
+Two legs through the full build_linking_tables, same corpus, same AUTO
+df-cap:
 
-  all           the naive Σ df² inverted-index join (r3 baseline)
-  prefix_parity ppjoin prefix filtering, cap on candidates AND scoring —
-                bit-for-bit the naive capped lower-bound scores; the gated
-                edge md5 must be IDENTICAL to `all`
-  prefix        (default) cap bounds candidate generation only, scoring is
-                EXACT — gated edges are a measured SUPERSET of `all`; the
-                planted-pair recall shows what the superset buys
+  default       whatever the size gate picks — driver-local up to 50k
+                uncapped norms (MERGE_HINT_MIN_VOCAB), distributed above
+  distributed   ``local_max_vocab=0``: the Spark prefix-filtered join at
+                any size
 
-Reports wall seconds per strategy, edge md5s, the speedup, and the
-planted mergeable/hard pair stats for each leg.
+Reports, per leg, the path that ran, wall seconds, the sorted-edge md5 and
+the planted mergeable/hard pair stats, then one line saying whether the
+two md5s match (they must whenever both legs run uncapped).
 
 Run serially (no concurrent Spark jobs). Usage:
-  PYTHONPATH=/root/repo python scripts/prefix_bench.py [n_convs] [vocab_scale] [strategies]
-
-``strategies`` is a comma list (default "all,prefix_parity,prefix").
-At the top vocabulary tiers the naive Σ df² leg is the measurement that
-does NOT finish in bench budget — pass "prefix_parity,prefix" there; the
-cross-strategy md5/superset summary lines are emitted only for the
-strategies actually run.
+  PYTHONPATH=. python scripts/prefix_bench.py [n_convs] [vocab_scale]
 """
 
 from __future__ import annotations
@@ -57,11 +46,6 @@ from named_entity_algorithm_project_spark.session import get_spark
 def main():
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
     vocab_scale = int(sys.argv[2]) if len(sys.argv) > 2 else 1_250
-    strategies = (
-        sys.argv[3].split(",")
-        if len(sys.argv) > 3
-        else ["all", "prefix_parity", "prefix"]
-    )
     # shuffle partitions are scale-set by the caller (guide §2.2): 32 is
     # right up to the ~460k-norm tier; the 917k-norm tier packs ~1M weight
     # rows per partition per join side at 32, which starves the score
@@ -82,18 +66,15 @@ def main():
     extracted = extract_combined(transcripts).localCheckpoint(eager=True)
     mentions, abbrevs = split_extraction(extracted)
 
-    results = {}
-    edge_sets = {}
-    for strategy in strategies:
+    md5s = {}
+    for leg, kw in (("default", {}), ("distributed", {"local_max_vocab": 0})):
         t0 = time.time()
-        linking = build_linking_tables(
-            mentions, abbrevs, tfidf_candidates=strategy, local_max_vocab=0
-        )
+        linking = build_linking_tables(mentions, abbrevs, **kw)
         edge_rows = sorted(
             (r["src"], r["dst"]) for r in linking.edges.collect()
         )
         wall = time.time() - t0
-        digest = hashlib.md5(
+        md5s[leg] = hashlib.md5(
             "\n".join(f"{a}\t{b}" for a, b in edge_rows).encode()
         ).hexdigest()
         mp, mh = planted_pair_edge_stats(
@@ -104,18 +85,17 @@ def main():
             spark, linking.norms, linking.edges,
             planted_hard_pairs(vocab_scale),
         )
-        edge_sets[strategy] = set(edge_rows)
-        results[strategy] = {"wall_s": round(wall, 1)}
         print(
             json.dumps(
                 {
-                    "strategy": strategy,
+                    "leg": leg,
+                    "path": linking.path,
                     "n_convs": n_convs,
                     "vocab_scale": vocab_scale,
                     "n_norms": linking.n_norms,
                     "auto_df_cap": linking.candidate_max_df,
                     "n_edges": len(edge_rows),
-                    "edge_md5": digest,
+                    "edge_md5": md5s[leg],
                     "wall_s": round(wall, 1),
                     "planted_present": mp,
                     "planted_linked": mh,
@@ -126,30 +106,10 @@ def main():
             ),
             flush=True,
         )
-    summary = {}
-    if "all" in edge_sets and "prefix_parity" in edge_sets:
-        summary["parity_md5_identical"] = (
-            edge_sets["all"] == edge_sets["prefix_parity"]
-        )
-        summary["speedup_parity"] = round(
-            results["all"]["wall_s"]
-            / max(results["prefix_parity"]["wall_s"], 1e-9),
-            2,
-        )
-    if "all" in edge_sets and "prefix" in edge_sets:
-        summary["exact_superset_of_naive"] = (
-            edge_sets["all"] <= edge_sets["prefix"]
-        )
-        summary["speedup_exact"] = round(
-            results["all"]["wall_s"] / max(results["prefix"]["wall_s"], 1e-9),
-            2,
-        )
-    if "prefix_parity" in edge_sets and "prefix" in edge_sets:
-        summary["exact_superset_of_parity"] = (
-            edge_sets["prefix_parity"] <= edge_sets["prefix"]
-        )
-    if summary:
-        print(json.dumps(summary), flush=True)
+    print(
+        json.dumps({"md5_match": md5s["default"] == md5s["distributed"]}),
+        flush=True,
+    )
     spark.stop()
 
 

@@ -34,6 +34,12 @@ from named_entity_algorithm_project_spark.operators.linking import (
 from named_entity_algorithm_project_spark.session import get_spark
 
 DIM = 64
+THRESHOLDS = (0.80, 0.90)
+# Spark folds each LSH score with zip_with/aggregate while the truth comes
+# from blocked BLAS matmul: summation orders differ, so a cosine on a
+# threshold can land on either side of it by an ulp. Both sides compare
+# against t - EPS so a boundary pair cannot trip the subset assert.
+EPS = 1e-12
 
 
 def build_vocab(n: int, seed: int = 5) -> list:
@@ -59,40 +65,51 @@ def build_vocab(n: int, seed: int = 5) -> list:
     return sorted(norms)
 
 
-def exact_pairs(norms: list, threshold: float) -> set:
-    """Blocked numpy matmul ground truth: {(a, b)} with cosine >= t, a<b."""
+def exact_pairs(norms: list) -> dict:
+    """Blocked numpy matmul ground truth, computed once at the lowest
+    threshold: {(a, b): cosine} for a<b with cosine >= min(THRESHOLDS) -
+    EPS. Each higher threshold's truth is a filter of it."""
     mat = embed_batch(norms, DIM)
     n = len(norms)
-    out = set()
+    out = {}
     block = 4096
     for i0 in range(0, n, block):
         sims = mat[i0 : i0 + block] @ mat.T
-        ii, jj = np.nonzero(sims >= threshold)
+        ii, jj = np.nonzero(sims >= min(THRESHOLDS) - EPS)
         for di, j in zip(ii, jj):
             i = i0 + int(di)
             j = int(j)
             if i < j:
-                out.add((norms[i], norms[j]))
+                out[(norms[i], norms[j])] = float(sims[di, j])
     return out
 
 
-def recall_arm(spark, n: int, thresholds=(0.80, 0.90)) -> list:
+def add_recall(row: dict, got: list, truth: dict) -> None:
+    """Per threshold: assert the LSH pairs are a subset of the truth and
+    record the truth size and the LSH recall in ``row``."""
+    for t in THRESHOLDS:
+        got_t = {(r["a"], r["b"]) for r in got if r["score"] >= t - EPS}
+        truth_t = {k for k, s in truth.items() if s >= t - EPS}
+        assert got_t <= truth_t, "LSH emitted a non-exact pair?!"
+        row[f"exact_pairs_ge_{t}"] = len(truth_t)
+        row[f"recall_at_{t}"] = (
+            round(len(got_t) / len(truth_t), 4) if truth_t else 1.0
+        )
+
+
+def recall_arm(spark, n: int) -> list:
     norms = build_vocab(n, seed=5)
-    truth = {t: exact_pairs(norms, t) for t in thresholds}
+    truth = exact_pairs(norms)
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     rows = []
     for bands, band_bits in ((4, 4), (8, 4)):
         t0 = time.time()
         got = (
             semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
-            .filter(F.col("score") >= min(thresholds))
+            .filter(F.col("score") >= min(THRESHOLDS) - EPS)
             .collect()
         )
         wall = time.time() - t0
-        got_pairs = {
-            t: {(r["a"], r["b"]) for r in got if r["score"] >= t}
-            for t in thresholds
-        }
         row = {
             "arm": "recall",
             "n_norms": n,
@@ -100,12 +117,7 @@ def recall_arm(spark, n: int, thresholds=(0.80, 0.90)) -> list:
             "band_bits": band_bits,
             "t_lsh_s": round(wall, 2),
         }
-        for t in thresholds:
-            assert got_pairs[t] <= truth[t], "LSH emitted a non-exact pair?!"
-            row[f"exact_pairs_ge_{t}"] = len(truth[t])
-            row[f"recall_at_{t}"] = (
-                round(len(got_pairs[t]) / len(truth[t]), 4) if truth[t] else 1.0
-            )
+        add_recall(row, got, truth)
         rows.append(row)
         print(json.dumps(row), flush=True)
     return rows
@@ -127,7 +139,7 @@ def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
     t0 = time.time()
     got = (
         semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
-        .filter(F.col("score") >= 0.8)
+        .filter(F.col("score") >= min(THRESHOLDS) - EPS)
         .collect()
     )
     row = {
@@ -139,14 +151,7 @@ def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
         "pairs_ge_0.8": len(got),
     }
     if os.environ.get("KG_SEMANTIC_SCALE_RECALL"):
-        for t in (0.80, 0.90):
-            truth = exact_pairs(norms, t)
-            got_pairs = {(r["a"], r["b"]) for r in got if r["score"] >= t}
-            assert got_pairs <= truth, "LSH emitted a non-exact pair?!"
-            row[f"exact_pairs_ge_{t}"] = len(truth)
-            row[f"recall_at_{t}"] = (
-                round(len(got_pairs) / len(truth), 4) if truth else 1.0
-            )
+        add_recall(row, got, exact_pairs(norms))
     print(json.dumps(row), flush=True)
     return row
 

@@ -14,8 +14,9 @@ from named_entity_algorithm_project_spark.functions.textnorm import (
 )
 from named_entity_algorithm_project_spark.operators.canonical import pick_canonicals
 from named_entity_algorithm_project_spark.operators.linking import (
+    auto_candidate_max_df,
     compute_base_threshold,
-    similarity_pairs,
+    similarity_pairs_prefix,
     tfidf_weights,
 )
 from named_entity_algorithm_project_spark.oracle import _tfidf_cosine_pairs
@@ -102,9 +103,10 @@ def test_spark_tfidf_matches_oracle(spark):
     oracle = _tfidf_cosine_pairs(norms)
     df = spark.createDataFrame([(n,) for n in norms], "norm string")
     weights = tfidf_weights(df, len(norms))
+    # at a zero floor every gram is a prefix gram: all pairs sharing one
     pairs = {
         (r["a"], r["b"]): r["score"]
-        for r in similarity_pairs(weights, salt_partitions=4).collect()
+        for r in similarity_pairs_prefix(weights, gate_floor=0.0).collect()
     }
     assert set(pairs) == set(oracle)
     for k, v in oracle.items():
@@ -120,6 +122,13 @@ def test_base_threshold_formula():
     assert compute_base_threshold(1000) == pytest.approx(0.80)
     assert compute_base_threshold(10000) == pytest.approx(0.82)
     assert compute_base_threshold(10**9) == pytest.approx(0.85)  # capped
+
+
+def test_auto_candidate_max_df_formula():
+    # exact up to MERGE_HINT_MIN_VOCAB norms, then min(max(5%·N, 100), 4000)
+    assert auto_candidate_max_df(50_000) is None
+    assert auto_candidate_max_df(50_001) == 2_500
+    assert auto_candidate_max_df(1_000_000) == 4_000
 
 
 def test_adaptive_threshold_floors():
@@ -168,8 +177,10 @@ def test_canonical_pick_ordering(spark):
 
 
 def test_candidate_max_df_blocking_is_subset(spark):
-    """The scale knob (drop ubiquitous n-grams from the similarity join)
-    must only ever remove edges, never invent them."""
+    """The scale knob (drop ubiquitous n-grams from candidate generation)
+    must only ever remove edges, never invent them — and it keeps every
+    edge a join scoring only the sub-cap grams would gate (the python
+    capped reference below), because scores stay exact."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
@@ -178,6 +189,7 @@ def test_candidate_max_df_blocking_is_subset(spark):
         extract_mentions,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
+        _adaptive_threshold_py,
         build_linking_tables,
     )
 
@@ -188,13 +200,31 @@ def test_candidate_max_df_blocking_is_subset(spark):
         (r["src"], r["dst"])
         for r in build_linking_tables(mentions, abbrevs).edges.collect()
     }
-    blocked = {
-        (r["src"], r["dst"])
-        for r in build_linking_tables(
-            mentions, abbrevs, candidate_max_df=3
-        ).edges.collect()
-    }
-    assert blocked <= exact
+    # an exact edge whose sub-cap-only score still clears its gate is an
+    # edge of the capped lower-bound join (or an abbrev/alias edge, which
+    # the cap never touches): the exact-scoring cap must keep it
+    n_naive_capped = 0
+    for cap in (3, 10):
+        lt = build_linking_tables(mentions, abbrevs, candidate_max_df=cap)
+        assert lt.path == "distributed" and lt.candidate_max_df == cap
+        blocked = {(r["src"], r["dst"]) for r in lt.edges.collect()}
+        assert blocked <= exact, cap
+        capped = _capped_cosine_pairs(
+            [r["norm"] for r in lt.norms.collect()], cap
+        )
+        base = lt.base_threshold
+        naive_capped = {
+            (a, b)
+            for a, b in exact
+            if capped.get((a, b), 0.0)
+            >= min(
+                _adaptive_threshold_py(a, base),
+                _adaptive_threshold_py(b, base),
+            )
+        }
+        assert naive_capped <= blocked, cap
+        n_naive_capped += len(naive_capped)
+    assert n_naive_capped, "no edge survives the capped scores at any cap"
 
 
 def test_fused_one_scan_parity(spark):
@@ -240,12 +270,14 @@ def test_fused_one_scan_parity(spark):
     assert fused_lt.n_norms == split_lt.n_norms
 
 
-def test_local_path_parity(spark):
+def test_local_path_parity(spark, monkeypatch):
     """The driver-local linking path (collected fused table + prefix
     scorer + python gate cascade) must produce the identical LinkingTables
     as the distributed cascade: same (norm, freq, effective-types) rows,
     same gated edge set, same extra nodes, same base threshold. The last
-    corpus (6,351 norms) lies above the former 5k local bound."""
+    corpus (6,351 norms) lies above the former 5k local bound. On the two
+    small corpora the distributed edges must also equal those the local
+    cascade gates from the oracle's naive all-pairs scores."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
@@ -255,9 +287,13 @@ def test_local_path_parity(spark):
         extract_combined,
         split_extraction,
     )
+    from named_entity_algorithm_project_spark.operators import linking
     from named_entity_algorithm_project_spark.operators.linking import (
         build_linking_tables,
     )
+
+    def edge_set(lt):
+        return {(r[0], r[1]) for r in lt.edges.collect()}
 
     corpora = [
         ((n_convs, seed), spark.createDataFrame(
@@ -291,12 +327,21 @@ def test_local_path_parity(spark):
             }
 
         assert norms_set(loc) == norms_set(dist), key
-        assert {(r[0], r[1]) for r in loc.edges.collect()} == {
-            (r[0], r[1]) for r in dist.edges.collect()
-        }, key
+        assert edge_set(loc) == edge_set(dist), key
         assert {r[0] for r in loc.extra_nodes.collect()} == {
             r[0] for r in dist.extra_nodes.collect()
         }, key
+        if loc.n_norms < 5_000:
+            with monkeypatch.context() as m:
+                m.setattr(
+                    linking,
+                    "tfidf_prefix_pairs",
+                    lambda norms, floor: _tfidf_cosine_pairs(norms),
+                )
+                naive = build_linking_tables(
+                    mentions, abbrevs, extracted=extracted
+                )
+            assert edge_set(naive) == edge_set(dist), key
     assert loc.n_norms > 5_000
 
 
@@ -337,86 +382,66 @@ def test_prefix_scorer_matches_oracle(floor):
 
 def test_auto_blocking_recall(spark):
     """The auto df-cap (5% of the vocabulary — the default above 50k unique
-    norms) is a prefix-filter with BOUNDED loss: the capped score is a lower
-    bound on the exact cosine, short by at most the mass of the dropped
-    (idf-floor) n-grams. Contract verified here at a vocabulary where the
-    cap actually operates (the generator corpus is too small):
+    norms) bounds candidate generation only, so its loss is BOUNDED recall,
+    never a wrong score. Contract verified here at a vocabulary where the
+    cap actually operates (the generator corpus is too small), on the
+    production capped prefix join at a 0.8 floor:
 
-      1. capped candidate pairs/scores are a subset / lower bound
-      2. the loss is small: score delta <= 0.06 on every exact pair >= 0.8
-      3. margin recall: >= 0.99 of pairs scoring >= threshold+0.05 in the
-         exact path still clear the threshold after capping (true merges
-         score well above the floor; abbrev/alias edges cover the rest —
-         SURVEY §7.4)
+      1. every emitted score is the exact oracle cosine (within 1e-9)
+      2. margin recall: >= 0.99 of pairs scoring >= floor+0.05 exactly are
+         emitted (true merges score well above the floor; abbrev/alias
+         edges cover the rest — SURVEY §7.4)
     """
-    import random
-    import string
-
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs,
-        tfidf_weights,
-    )
-
-    rng = random.Random(5)
-    # Zipf-ish vocabulary: short COMMON prefixes (their grams exceed the df
-    # cap, like real morphological stopgrams) + long RARE cores that carry
-    # each near-duplicate pair's similarity mass.
-    prefixes = ["pol", "met", "oxi", "ben", "ami", "chl", "flu", "nan"]
-    words = sorted(
-        {
-            rng.choice(prefixes)
-            + "".join(
-                rng.choice(string.ascii_lowercase)
-                for _ in range(rng.randint(8, 12))
-            )
-            for _ in range(400)
-        }
-    )
-    base = sorted(
-        {
-            " ".join(rng.choice(words) for _ in range(rng.randint(1, 3)))
-            for _ in range(700)
-        }
-    )[:600]
-    variants = []
-    for t in base[:200]:
-        variants.append(t + "s" if rng.random() < 0.5 else t.replace(" ", "-", 1))
-    norms = sorted(set(base) | set(variants))
+    norms = _random_vocab()
     n = len(norms)
     cap = max(int(0.05 * n), 1)
     thresh = 0.8
 
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
-    weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-
-    def scores(capped):
-        pairs = similarity_pairs(
-            weights,
-            salt_partitions=4,
-            candidate_max_df=cap if capped else None,
-            df_counts=df_counts if capped else None,
-        )
-        return {
-            (r["a"], r["b"]): r["score"]
-            for r in pairs.filter(F.col("score") >= 0.5).collect()
-        }
-
-    exact = scores(False)
-    capped = scores(True)
+    weights = tfidf_weights(df, n)
+    capped = {
+        (r["a"], r["b"]): r["score"]
+        for r in similarity_pairs_prefix(
+            weights, gate_floor=thresh, candidate_max_df=cap
+        ).collect()
+    }
+    exact = _tfidf_cosine_pairs(norms)
     hot = {k for k, s in exact.items() if s >= thresh}
     assert len(hot) >= 100, "fixture produced too few above-threshold pairs"
-    # 1. lower bound
-    for k in hot:
-        assert capped.get(k, 0.0) <= exact[k] + 1e-9
-    # 2. bounded loss
-    max_delta = max(exact[k] - capped.get(k, 0.0) for k in hot)
-    assert max_delta <= 0.06, f"df-cap dropped {max_delta:.3f} cosine mass"
-    # 3. margin recall
+    # 1. exact scores
+    for k, s in capped.items():
+        assert s == pytest.approx(exact[k], abs=1e-9), k
+    # 2. margin recall
     margin = {k for k, s in exact.items() if s >= thresh + 0.05}
-    kept = {k for k in margin if capped.get(k, 0.0) >= thresh}
-    recall = len(kept) / max(len(margin), 1)
+    recall = len(margin & set(capped)) / max(len(margin), 1)
     assert recall >= 0.99, f"margin recall {recall:.4f} at cap {cap} (n={n})"
+
+
+def _capped_cosine_pairs(norms, cap):
+    """Python reference of a df-capped join that SCORES only the grams
+    with df <= cap: the oracle's all-pairs sum restricted to those grams,
+    so every score is a lower bound on the exact cosine."""
+    from collections import defaultdict
+
+    from named_entity_algorithm_project_spark.functions.ngrams import (
+        tfidf_vectors,
+    )
+
+    vecs = tfidf_vectors(norms)
+    postings = defaultdict(list)
+    for i, vec in enumerate(vecs):
+        for g in vec:
+            postings[g].append(i)
+    scores = defaultdict(float)
+    for g, idxs in postings.items():
+        if len(idxs) > cap:
+            continue
+        for ii, i in enumerate(idxs):
+            for j in idxs[ii + 1:]:
+                scores[(i, j)] += vecs[i][g] * vecs[j][g]
+    return {
+        tuple(sorted((norms[i], norms[j]))): s for (i, j), s in scores.items()
+    }
 
 
 def _random_vocab(seed=5, n_words=400, n_base=700, n_keep=600, n_var=200):
@@ -451,21 +476,16 @@ def _random_vocab(seed=5, n_words=400, n_base=700, n_keep=600, n_var=200):
 
 
 def test_prefix_filter_scores_match_naive(spark):
-    """similarity_pairs_prefix contracts against the naive join:
+    """similarity_pairs_prefix contracts against python references:
 
-    * UNCAPPED: every naive pair at/above the gate floor survives with the
-      identical score (the filter only prunes pairs that cannot reach the
+    * UNCAPPED: every oracle pair at/above the gate floor survives with the
+      oracle's score (the filter only prunes pairs that cannot reach the
       floor);
-    * capped, cap_scope="all" (parity mode): identical to the naive capped
-      join's lower-bound scores;
-    * capped, cap_scope="candidates" (default): every emitted score is the
-      EXACT cosine (equals the uncapped naive score), and every naive
-      CAPPED pair at/above the floor is a superset member."""
+    * capped: every emitted score is the EXACT oracle cosine, and every
+      pair of the capped lower-bound reference at/above the floor is
+      emitted (superset)."""
     from named_entity_algorithm_project_spark.functions.textnorm import (
         adaptive_threshold_floor,
-    )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs_prefix,
     )
 
     norms = _random_vocab(seed=9)
@@ -473,93 +493,37 @@ def test_prefix_filter_scores_match_naive(spark):
     floor = adaptive_threshold_floor(0.80)
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
     cap = max(int(0.05 * n), 1)
+    oracle = _tfidf_cosine_pairs(norms)
 
     def collect(frame):
         return {(r["a"], r["b"]): r["score"] for r in frame.collect()}
 
-    naive_exact = collect(similarity_pairs(weights, salt_partitions=4))
-    naive_capped = collect(
-        similarity_pairs(
-            weights, salt_partitions=4, candidate_max_df=cap,
-            df_counts=df_counts,
-        )
-    )
-
     # --- uncapped: identical above the floor --------------------------------
-    pref = collect(
-        similarity_pairs_prefix(weights, gate_floor=floor, salt_partitions=4)
-    )
-    above = {k for k, s in naive_exact.items() if s >= floor}
+    pref = collect(similarity_pairs_prefix(weights, gate_floor=floor))
+    above = {k for k, s in oracle.items() if s >= floor}
     assert len(above) >= 50, "fixture produced too few above-floor pairs"
     assert above <= set(pref)
     for k, s in pref.items():
-        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
+        assert s == pytest.approx(oracle[k], abs=1e-9), k
     assert all(s >= floor - 1e-6 for s in pref.values())
 
-    # --- capped parity mode: naive capped scores term-for-term --------------
-    parity = collect(
-        similarity_pairs_prefix(
-            weights, gate_floor=floor, salt_partitions=4,
-            candidate_max_df=cap, df_counts=df_counts, cap_scope="all",
-        )
-    )
-    capped_above = {k for k, s in naive_capped.items() if s >= floor}
-    assert capped_above <= set(parity)
-    for k, s in parity.items():
-        assert s == pytest.approx(naive_capped[k], abs=1e-9), k
-
-    # --- capped default: exact scores, superset of naive capped -------------
+    # --- capped: exact scores, superset of the capped reference -------------
     exact_capped = collect(
         similarity_pairs_prefix(
-            weights, gate_floor=floor, salt_partitions=4,
-            candidate_max_df=cap, df_counts=df_counts,
+            weights, gate_floor=floor, candidate_max_df=cap
         )
     )
+    capped_above = {
+        k for k, s in _capped_cosine_pairs(norms, cap).items() if s >= floor
+    }
+    assert capped_above, "fixture has no capped pair above the floor"
     assert capped_above <= set(exact_capped), (
-        "cap_scope=candidates lost a naive-capped above-floor pair"
+        "the capped prefix join lost a capped-reference above-floor pair"
     )
     for k, s in exact_capped.items():
         # every emitted score is the TRUE cosine, not the capped lower bound
-        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
-
-
-def test_prefix_filter_gated_edges_identical(spark):
-    """End-to-end edge-set contracts across candidate strategies:
-    uncapped, prefix == naive exactly; capped, the parity mode == naive
-    exactly while the default exact-scoring mode is a superset."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
-    )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        build_linking_tables,
-    )
-
-    rows = generate_rows(n_convs=60, seed=17)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    mentions, abbrevs = extract_mentions(df)
-
-    def edges(**kw):
-        return {
-            (r["src"], r["dst"])
-            for r in build_linking_tables(mentions, abbrevs, **kw).edges.collect()
-        }
-
-    # uncapped, force the distributed cascade: at this size the default
-    # would build driver-side for both strategies and compare nothing
-    assert edges(tfidf_candidates="prefix", local_max_vocab=0) == edges(
-        tfidf_candidates="all", local_max_vocab=0
-    )
-    naive_capped = edges(tfidf_candidates="all", candidate_max_df=3)
-    assert edges(
-        tfidf_candidates="prefix_parity", candidate_max_df=3
-    ) == naive_capped
-    assert edges(tfidf_candidates="prefix", candidate_max_df=3) >= naive_capped
+        assert s == pytest.approx(oracle[k], abs=1e-9), k
 
 
 def test_planted_pair_recall_under_cap(spark):
